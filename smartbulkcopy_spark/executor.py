@@ -16,6 +16,10 @@ client/SmartBulkCopy.cs:69-253) Spark-first:
 7. monitor heartbeat while copying
 8. verification: row counts + content fingerprint (strictly stronger than
    the reference's count-only CheckResults, client/SmartBulkCopy.cs:296-339)
+   in ONE Spark job per table — both sides' fingerprints ride one
+   observed scan (verify.py). The source is read once and shared by the
+   copy and the check; the destination is read once after the copy and
+   shared by the check and the identity sync
 9. identity sync + temporal re-enable DDL hooks (emitted; executed only
    against JDBC destinations)
 
@@ -267,25 +271,29 @@ class CopyExecutor:
             res.pre_sql, res.post_sql = hooks.pre, hooks.post
             for sql in hooks.pre:
                 self.log(f"pre-copy DDL hook: {sql}")
+            # One source read (one schema-inference job) feeds both the
+            # copy and the check. The destination is read after the copy
+            # with its own inferred schema, so a type or column drift in
+            # the write fails the check instead of being coerced away.
+            source = self.spark.read.parquet(tasks[0].source.location)
             with_retry(
                 lambda: copy_table(
-                    self.spark, tasks, dest, truncate=True
+                    self.spark, tasks, dest, truncate=True, source=source
                 ),
                 self.config,
                 log=self.log,
             )
-            check = check_copy(
-                self.spark.read.parquet(tasks[0].source.location),
-                self.spark.read.parquet(dest),
-                table,
-            )
+            written = self.spark.read.parquet(dest)
+            check = check_copy(source, written, table)
             res.source_rows = check.source_rows
             res.destination_rows = check.destination_rows
             res.content_match = check.content_match
             for sql in hooks.post:
                 self.log(f"post-copy DDL hook: {sql}")
             if self.config.sync_identity:
-                res.identity_reseed_sql = self._identity_sql(table, tasks[0])
+                res.identity_reseed_sql = self._identity_sql(
+                    table, tasks[0], written
+                )
                 if res.identity_reseed_sql:
                     self.log(f"identity sync (DDL hook): {res.identity_reseed_sql}")
         except Exception as exc:  # per-table isolation, like the reference
@@ -299,13 +307,14 @@ class CopyExecutor:
                 state.running.discard(table)
         return res
 
-    def _identity_sql(self, table: str, task) -> str | None:
+    def _identity_sql(self, table: str, task, written) -> str | None:
         """Post-copy identity reseed DDL (reference:
         client/SmartBulkCopy.cs:341-389): destination is reseeded to the
         copied max OF THE IDENTITY COLUMN — which the catalog must name
         (sys.identity_columns over JDBC, LayoutSpec for files); guessing
         a numeric column would reseed to a wrong, possibly colliding
-        value. No known identity column -> no reseed."""
+        value. No known identity column -> no reseed. ``written`` is the
+        destination frame the check already read."""
         from smartbulkcopy_spark.ddl import identity_reseed_sql
 
         src: TableInfo = task.source
@@ -314,13 +323,7 @@ class CopyExecutor:
             return None
         import pyspark.sql.functions as F
 
-        row = (
-            self.spark.read.parquet(
-                os.path.join(self.config.destination, f"{table}.parquet")
-            )
-            .agg(F.max(id_col).alias("m"))
-            .first()
-        )
+        row = written.agg(F.max(id_col).alias("m")).first()
         if row["m"] is None:
             return None
         return identity_reseed_sql(table, row["m"])

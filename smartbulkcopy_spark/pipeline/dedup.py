@@ -3089,6 +3089,18 @@ STUDY_ID_STRIDE = 32  # > max family size, so member ids never collide
 _STUDY_SIZE_SPARK = "5 + (doc_id % 4) * 8"  # sequence() upper bound, inclusive
 
 
+def untag_parity(lab, g: int, label: str):
+    """(doc_id, <label>) of graph ``g`` from CC labels over parity-tagged
+    ids (graph g's node = 2*id + g). Spark's `%` and `DIV` truncate
+    toward zero, which drops or mis-maps a negative odd id (-5 % 2 = -1,
+    -5 DIV 2 = -2); pmod and the arithmetic shift (floor division by 2,
+    exact over the whole BIGINT range) hold for every sign."""
+    return lab.where(F.expr("pmod(node, 2)") == g).select(
+        F.expr("shiftright(node, 1)").alias("doc_id"),
+        F.expr("shiftright(lbl, 1)").alias(label),
+    )
+
+
 def star_fallback_recall(spark, sf_dir):
     """One row: family-count and per-member CC-label agreement between
     the production clique/star candidate rule and the clique-only rule
@@ -3139,8 +3151,8 @@ def star_fallback_recall(spark, sf_dir):
     # latency is paid max(rounds) times instead of sum(rounds), and the
     # edge persist/count setup once. Labels transform exactly:
     # min(2*id + g) over a component = 2*min(id) + g (the parity g is
-    # constant within a component), so lbl DIV 2 recovers each side's
-    # original component minimum bit-for-bit.
+    # constant within a component), so untag_parity recovers each
+    # side's original component minimum bit-for-bit.
     tagged = star_pairs.select(
         (F.col("a_id") * 2).alias("a_id"),
         (F.col("b_id") * 2).alias("b_id"),
@@ -3151,14 +3163,8 @@ def star_fallback_recall(spark, sf_dir):
         )
     )
     lab = connected_components(spark, tagged, shuffle_partitions=8)
-    sl = lab.where(F.col("node") % 2 == 0).select(
-        F.expr("node DIV 2").alias("doc_id"),
-        F.expr("lbl DIV 2").alias("sl"),
-    )
-    cl = lab.where(F.col("node") % 2 == 1).select(
-        F.expr("node DIV 2").alias("doc_id"),
-        F.expr("lbl DIV 2").alias("cl"),
-    )
+    sl = untag_parity(lab, 0, "sl")
+    cl = untag_parity(lab, 1, "cl")
     j = sl.join(cl, "doc_id", "full")
     agree = F.sum(
         F.coalesce((F.col("sl") == F.col("cl")).cast("long"), F.lit(0))

@@ -36,13 +36,21 @@ def _sort_cols(task: CopyTask):
     ]
 
 
-def read_for_tasks(spark: SparkSession, tasks: list[CopyTask]) -> DataFrame:
+def read_for_tasks(
+    spark: SparkSession,
+    tasks: list[CopyTask],
+    source: DataFrame | None = None,
+) -> DataFrame:
     """Build the single partitioned DataFrame equivalent to one table's
-    task family. ``tasks`` must share a source table."""
+    task family. ``tasks`` must share a source table; ``source`` is that
+    table already read (saves a schema-inference job), else it is read
+    here."""
     if not tasks:
         raise ValueError("empty task list")
     head = tasks[0]
-    df = spark.read.parquet(head.source.location).select(*head.select_columns())
+    if source is None:
+        source = spark.read.parquet(head.source.location)
+    df = source.select(*head.select_columns())
 
     if isinstance(head, LogicalPartitionCopyTask) and head.n_partitions > 1:
         # Same canonical bucket expression as the JDBC predicate string
@@ -81,5 +89,6 @@ def copy_table(
     tasks: list[CopyTask],
     dest_path: str,
     truncate: bool = True,
+    source: DataFrame | None = None,
 ) -> None:
-    write_table(read_for_tasks(spark, tasks), dest_path, truncate)
+    write_table(read_for_tasks(spark, tasks, source), dest_path, truncate)

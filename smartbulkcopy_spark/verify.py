@@ -2,10 +2,40 @@
 reference: client/SmartBulkCopy.cs:296-339) plus a strictly stronger
 order-insensitive content hash (SURVEY Q20).
 
-The hash is computed entirely JVM-side: xxhash64 across all columns per
-row, combined with a commutative/associative SUM (wrapped to 64 bits) —
-one map-side-combinable aggregation, no shuffle of data rows, no collect
-of anything but a single row. At 100 TB this runs at scan speed.
+Mechanism: one observed scan per check, whatever the number of sides.
+Each side is projected row-locally to its row hash (xxhash64 over the
+columns in sorted-name order) and gets its own `DataFrame.observe`:
+the row count and the sums of the hash's four 16-bit pieces. The
+observed sides are unioned and written to the `noop` sink, so the scans
+are the whole job: every scan task folds its rows into a partial
+aggregate and the driver merges the partials through each observation's
+accumulator.
+
+- No shuffle. The old `agg(...).first()` per side paid an AQE
+  shuffle-map job plus a result job (4 jobs per table); the observed
+  noop write is 1 job for both sides together, at scan speed.
+- Exactly once. Each observation sits directly over its side's scan,
+  below the union, with no exchange anywhere in the plan, so it runs in
+  the write's result stage, where Spark applies each partition's
+  accumulator update once even when a task is retried.
+  `Observation.get` is read only after the write returned: a failed
+  scan raises out of the write instead of leaving `get` blocked on
+  metrics that never arrive.
+- One fresh unnamed `Observation` per side per call: the executor
+  verifies from several pool threads at once, and an Observation serves
+  one action.
+- BIGINT pieces, not one decimal(38,0) sum. Observed aggregates run
+  row by row outside whole-stage codegen, where decimal addition is
+  expensive: on 2 x 10M rows (4 cores) the old agg pair took 1.5 s, one
+  tagged observe with `count_if`/`sum(when(...))` decimal sums over the
+  union 5.3 s, per-side decimal sums 3.3 s, the per-side 16-bit pieces
+  1.2 s. A piece sum stays below N * 2^16, exact in BIGINT up to 2^47
+  rows per side (past that ANSI mode raises; it never wraps silently).
+  The pieces recombine to the sum of the hashes mod 2^64 driver-side.
+- The destination keeps its own inferred schema. Reading it with the
+  source's schema would coerce (or null out) a type or column drift in
+  the write, which must instead change the fingerprint and fail the
+  check.
 
 SUM, not XOR: XOR cancels rows that occur an even number of times, so a
 destination that dropped two copies of row A and gained two of row C
@@ -19,20 +49,49 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
+
+_PIECE_BITS = 16
+_PIECES = 64 // _PIECE_BITS
+
+
+def content_fingerprints(
+    *dfs: DataFrame, with_hash: bool = True
+) -> list[tuple[int, int | None]]:
+    """[(row_count, sum-of-row-hashes mod 2^64)] per frame, all from ONE
+    observed scan. Column order is normalized, so two frames with the same
+    multiset of rows fingerprint identically. ``with_hash=False`` counts
+    only (the hash slot is None)."""
+    observations, union = [], None
+    for df in dfs:
+        obs = Observation()
+        metrics = [F.count(F.lit(1)).alias("c")]
+        if with_hash:
+            side = df.select(F.xxhash64(*sorted(df.columns)).alias("h"))
+            mask = F.lit((1 << _PIECE_BITS) - 1)
+            for j in range(_PIECES):
+                piece = F.shiftright("h", j * _PIECE_BITS).bitwiseAND(mask)
+                metrics.append(F.sum(piece).alias(f"p{j}"))
+        else:
+            side = df.select(F.lit(0).alias("h"))
+        side = side.observe(obs, *metrics)
+        observations.append(obs)
+        union = side if union is None else union.union(side)
+    union.write.format("noop").mode("overwrite").save()
+    out = []
+    for obs in observations:
+        got = obs.get  # only after the write returned: a failed scan raised
+        total = None
+        if with_hash:
+            total = sum(
+                (got[f"p{j}"] or 0) << (j * _PIECE_BITS) for j in range(_PIECES)
+            ) % (1 << 64)
+        out.append((int(got["c"]), total))
+    return out
 
 
 def content_fingerprint(df: DataFrame) -> tuple[int, int]:
-    """(row_count, sum-of-row-hashes mod 2^64). Column order is normalized
-    so two DataFrames with the same multiset-of-rows fingerprint
-    identically. The sum runs in the decimal(38,0) domain (exact for up to
-    ~1e19 rows) because a raw BIGINT sum would overflow under ANSI mode;
-    the wrap to 64 bits happens once, driver-side."""
-    cols = sorted(df.columns)
-    hashed = df.select(F.xxhash64(*cols).cast("decimal(38,0)").alias("h"))
-    row = hashed.agg(F.count("*").alias("c"), F.sum("h").alias("s")).first()
-    total = int(row["s"]) if row["s"] is not None else 0
-    return int(row["c"]), total % (1 << 64)
+    return content_fingerprints(df)[0]
 
 
 @dataclass
@@ -60,8 +119,7 @@ def check_copy(
     table: str,
     with_hash: bool = True,
 ) -> TableCheck:
-    if with_hash:
-        sc, sh = content_fingerprint(source_df)
-        dc, dh = content_fingerprint(destination_df)
-        return TableCheck(table, sc, dc, sh, dh)
-    return TableCheck(table, source_df.count(), destination_df.count())
+    (sc, sh), (dc, dh) = content_fingerprints(
+        source_df, destination_df, with_hash=with_hash
+    )
+    return TableCheck(table, sc, dc, sh, dh)

@@ -20,7 +20,11 @@ from smartbulkcopy_spark.planner import (
 )
 from smartbulkcopy_spark.sources.jdbc import jdbc_predicates
 from smartbulkcopy_spark.sources.parquet import bucket_filter
-from smartbulkcopy_spark.verify import content_fingerprint
+from smartbulkcopy_spark.verify import (
+    check_copy,
+    content_fingerprint,
+    content_fingerprints,
+)
 
 
 def _nine_way(sf_dir):
@@ -169,7 +173,6 @@ def test_partition_key_only_ordered_write_path(spark, sf_dir, tmp_path):
     from smartbulkcopy_spark.catalog import LayoutSpec, ParquetCatalog
     from smartbulkcopy_spark.planner import OrderHint, analyze
     from smartbulkcopy_spark.sources.parquet import copy_table
-    from smartbulkcopy_spark.verify import check_copy
 
     layout = LayoutSpec(
         partition_column="l_shipdate",
@@ -238,6 +241,116 @@ def test_fingerprint_order_and_column_order_insensitive(spark):
     a = spark.createDataFrame([(1, "x"), (2, "y")], "i int, s string")
     b = spark.createDataFrame([("y", 2), ("x", 1)], "s string, i int")
     assert content_fingerprint(a) == content_fingerprint(b.select("s", "i"))
+
+
+def _python_fingerprint(df):
+    """Independent reference: collect every row hash and sum driver-side
+    in Python (two's-complement wrap), no Spark aggregate involved."""
+    import pyspark.sql.functions as F
+
+    hs = [r[0] for r in df.select(F.xxhash64(*sorted(df.columns))).collect()]
+    return len(hs), sum(hs) % (1 << 64)
+
+
+def _jobs_in_group(spark, fn):
+    """(fn(), number of Spark jobs it ran), counted through a job group."""
+    sc = spark.sparkContext
+    group = "sbc-test-job-count"
+    sc.setJobGroup(group, "job-count pin")
+    try:
+        before = set(sc.statusTracker().getJobIdsForGroup(group))
+        out = fn()
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+        after = set(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(after - before)
+
+
+def test_fused_fingerprint_matches_per_frame(spark):
+    """One observed scan over both sides gives each side exactly its own
+    fingerprint, on the duplicate-swap and column-order cases and on an
+    empty frame, and both equal an independent Python-side sum."""
+    a = spark.createDataFrame([(1,), (1,), (2,)], "x int")
+    b = spark.createDataFrame([(1,), (2,), (2,)], "x int")
+    c = spark.createDataFrame([(1, "x"), (2, "y")], "i int, s string")
+    d = spark.createDataFrame([("y", 2), ("x", 1)], "s string, i int")
+    e = spark.createDataFrame([], "x int")
+    for pair in ((a, b), (c, d), (a, e), (e, e)):
+        fused = content_fingerprints(*pair)
+        assert fused == [content_fingerprint(df) for df in pair]
+        assert fused == [_python_fingerprint(df) for df in pair]
+    assert content_fingerprint(e) == (0, 0)
+    assert content_fingerprints(c, d, with_hash=False) == [(2, None), (2, None)]
+
+
+@pytest.mark.parametrize(
+    "case", ["drop_one", "dup_destination", "dup_source", "alter_one",
+             "widen_type", "extra_column"],
+)
+def test_check_copy_detects_tampered_destination(spark, case):
+    """A destination that drops, duplicates (on either side) or alters a
+    row, or drifts a column's type or set, fails the fused check."""
+    import pyspark.sql.functions as F
+
+    rows = [(i, f"r{i}") for i in range(50)]
+    src = spark.createDataFrame(rows, "i int, s string")
+    dst = {
+        "drop_one": lambda: spark.createDataFrame(rows[1:], "i int, s string"),
+        "dup_destination": lambda: src.unionByName(src.where("i = 7")),
+        "dup_source": lambda: src.where("i != 7"),
+        "alter_one": lambda: src.withColumn(
+            "s", F.when(F.col("i") == 7, "changed").otherwise(F.col("s"))
+        ),
+        "widen_type": lambda: src.withColumn("i", F.col("i").cast("bigint")),
+        "extra_column": lambda: src.withColumn("z", F.lit(0)),
+    }[case]()
+    if case == "dup_source":
+        # the source carries a duplicate the destination lost; counts
+        # differ, and so do the hashes
+        src, dst = src.unionByName(src.where("i = 7")), src
+    check = check_copy(src, dst, "t")
+    assert not check.content_match
+    if case in ("alter_one", "widen_type", "extra_column"):
+        assert check.rows_match  # only the hash can catch these
+    assert check_copy(src, src, "t").content_match
+
+
+def test_check_copy_is_one_spark_job(spark):
+    """Both sides' counts and hashes come from ONE observed scan (an
+    agg().first() per side ran 2 jobs each); the count-only check too."""
+    a = spark.createDataFrame([(1, "x"), (1, "x"), (2, "y")], "i int, s string")
+    b = spark.createDataFrame([(2, "y"), (1, "x"), (2, "y")], "i int, s string")
+    check, jobs = _jobs_in_group(spark, lambda: check_copy(a, b, "t"))
+    assert jobs == 1
+    assert check.rows_match and not check.content_match
+    check, jobs = _jobs_in_group(
+        spark, lambda: check_copy(a, b, "t", with_hash=False)
+    )
+    assert jobs == 1
+    assert (check.source_rows, check.destination_rows) == (3, 3)
+    assert check.content_match  # count-only: equal counts pass
+
+
+def test_check_copy_concurrent_calls_keep_their_own_metrics(spark):
+    """The executor verifies from several pool threads at once: each call
+    must read back its own observation, never another call's."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    def one(n):
+        src = spark.range(n).selectExpr("id", "id * 3 AS v")
+        dst = src.where(f"id != {n - 1}") if n % 2 else src
+        return check_copy(src, dst, f"t{n}")
+
+    sizes = list(range(10, 26))  # 16 calls over 8 threads
+    with ThreadPoolExecutor(8) as pool:
+        futures = [pool.submit(one, n) for n in sizes]
+        checks = [f.result(timeout=300) for f in futures]
+    for n, c in zip(sizes, checks):
+        assert c.table == f"t{n}" and c.source_rows == n
+        assert c.destination_rows == (n - 1 if n % 2 else n)
+        assert c.content_match == (n % 2 == 0)
 
 
 def test_maxdop_hint_disables_jdbc_filter_pushdown(spark, monkeypatch):

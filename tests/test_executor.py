@@ -100,6 +100,104 @@ def test_identity_sync_emits_reseed(spark, sf_dir, tmp_path):
     assert res.identity_reseed_sql.startswith("DBCC CHECKIDENT('orders'")
 
 
+def _last_job_id(spark) -> int:
+    """Highest Spark job id so far, across every thread (the pool's jobs
+    carry no job group)."""
+    ssc = spark.sparkContext._jsc.sc()
+    ssc.listenerBus().waitUntilEmpty(30_000)
+    jobs = ssc.statusStore().jobsList(None)  # newest first
+    return jobs.apply(0).jobId() if jobs.size() else -1
+
+
+def test_run_jobs_per_table_bounded(spark, sf_dir, tmp_path):
+    """Per table: one source read, the copy write, one destination read
+    and ONE fused verify job. The bound is the measured value (4 jobs a
+    table; 8 before the source read was shared and verify fused)."""
+    cfg = _write_config(tmp_path, sf_dir, tmp_path / "dest",
+                        ["region", "nation"])
+    before = _last_job_id(spark)
+    report = run_from_config_file(cfg, spark=spark, monitor_interval=60,
+                                  log=lambda *_: None)
+    jobs = _last_job_id(spark) - before
+    assert report.exit_code == EXIT_OK, report.messages
+    assert all(r.content_match for r in report.results)
+    assert jobs <= 4 * len(report.results), jobs
+
+
+def test_destination_lost_before_verify_fails_only_that_table(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """Failure injection: one table's destination files vanish after the
+    copy, between the destination read and its verify scan. The scan
+    fails, so that table reports an error (no hang waiting on the
+    observation's metrics), the run still returns, and the other tables
+    stay ok."""
+    import shutil
+    from concurrent.futures import ThreadPoolExecutor
+
+    from smartbulkcopy_spark import executor
+    from smartbulkcopy_spark.executor import EXIT_COPY_ERRORS
+
+    dst = tmp_path / "dest"
+    real_check = executor.check_copy
+
+    def losing_check(source, written, table, *args, **kwargs):
+        if table == "nation":
+            shutil.rmtree(dst / "nation.parquet")
+        return real_check(source, written, table, *args, **kwargs)
+
+    monkeypatch.setattr(executor, "check_copy", losing_check)
+    cfg = _write_config(tmp_path, sf_dir, dst, ["region", "nation", "supplier"])
+    with ThreadPoolExecutor(1) as pool:
+        report = pool.submit(
+            run_from_config_file, cfg, spark=spark, monitor_interval=60,
+            log=lambda *_: None,
+        ).result(timeout=300)
+    assert report.exit_code == EXIT_COPY_ERRORS
+    by = {r.table: r for r in report.results}
+    assert by["nation"].error
+    assert not by["nation"].content_match
+    for t in ("region", "supplier"):
+        assert by[t].error is None and by[t].content_match, by[t]
+
+
+@pytest.mark.parametrize("tamper", ["drop", "duplicate", "alter"])
+def test_tampered_copy_fails_verify_and_exits_2(
+    spark, sf_dir, tmp_path, monkeypatch, tamper
+):
+    """A copy that drops, duplicates or alters one row of a table is
+    caught by the fused check: content_match is False, exit code 2."""
+    import pyspark.sql.functions as F
+
+    from smartbulkcopy_spark import executor
+
+    real_copy = executor.copy_table
+
+    def bad_copy(spark_, tasks, dest, truncate=True, source=None):
+        if tasks[0].table_name == "nation":
+            one = source.where("n_nationkey = 3")
+            source = {
+                "drop": lambda: source.where("n_nationkey != 3"),
+                "duplicate": lambda: source.unionByName(one),
+                "alter": lambda: source.withColumn(
+                    "n_name",
+                    F.when(F.col("n_nationkey") == 3, "X")
+                    .otherwise(F.col("n_name")),
+                ),
+            }[tamper]()
+        return real_copy(spark_, tasks, dest, truncate=truncate, source=source)
+
+    monkeypatch.setattr(executor, "copy_table", bad_copy)
+    cfg = _write_config(tmp_path, sf_dir, tmp_path / "dest",
+                        ["region", "nation"])
+    report = run_from_config_file(cfg, spark=spark, monitor_interval=60,
+                                  log=lambda *_: None)
+    assert report.exit_code == EXIT_MISMATCH, report.messages
+    by = {r.table: r for r in report.results}
+    assert by["region"].content_match
+    assert not by["nation"].content_match and by["nation"].error is None
+
+
 def test_identity_sync_skipped_without_known_identity(spark, sf_dir, tmp_path):
     """Guessing an identity column would reseed to a wrong value; with no
     catalog-known identity the reseed must be skipped entirely."""
